@@ -15,7 +15,9 @@ batch form:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -70,10 +72,14 @@ def consumer_lag(
     }
 
 
-def watermarks_to_app_txns(watermarks_df: DataFrame, app_id: str) -> dict[str, int]:
+def watermarks_to_app_txns(
+    watermarks: DataFrame | Iterable[Row], app_id: str
+) -> dict[str, int]:
     """``{app_id-partition: max_offset}`` — the Txn action keys
-    (ref delta_helpers.rs:29-40: txn_app_id_for_partition)."""
-    return {
-        f"{app_id}-{r['_partition']}": int(r["max_offset"])
-        for r in watermarks_df.collect()
-    }
+    (ref delta_helpers.rs:29-40: txn_app_id_for_partition).
+
+    ``watermarks``: rows with ``_partition`` and ``max_offset``, already
+    collected or as a DataFrame to collect."""
+    if isinstance(watermarks, DataFrame):
+        watermarks = watermarks.collect()
+    return {f"{app_id}-{r['_partition']}": int(r["max_offset"]) for r in watermarks}

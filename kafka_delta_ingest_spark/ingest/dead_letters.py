@@ -10,12 +10,14 @@ via ``substr(epoch_micros_to_iso8601(timestamp), 0, 10)``
 The reference quarantines row-by-row on parquet-write errors
 (src/writer.rs:617-637). The Spark-native equivalent is a vectorized
 predicate split: rows whose coercion produced errors go to the DLQ branch,
-the rest to the data branch — two filters over one cached plan, no Python.
+the rest to the data branch — two filters over one plan, no Python. The
+split itself caches nothing: a caller that runs both branches (the ingest
+pipeline) persists the coerced input first, so the parse runs once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,6 +37,11 @@ DEAD_LETTER_SCHEMA = T.StructType(
 )
 
 
+def is_dead_letter(error_col: str = "_coercion_errors") -> Column:
+    """True for a ``coerce_json`` row that belongs in the dead-letter queue."""
+    return F.size(F.col(error_col)) > 0
+
+
 def split_dead_letters(
     coerced: DataFrame,
     error_col: str = "_coercion_errors",
@@ -44,7 +51,7 @@ def split_dead_letters(
 
     good_rows keep the typed schema columns (error/raw dropped);
     dead_letters carry the reference DeadLetter schema."""
-    is_dead = F.size(F.col(error_col)) > 0
+    is_dead = is_dead_letter(error_col)
     good = coerced.where(~is_dead).drop(error_col, raw_col)
 
     is_deser = F.array_contains(F.col(error_col), "deserialization")

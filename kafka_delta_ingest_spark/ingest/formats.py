@@ -349,17 +349,3 @@ def make_deserializer(
         )
     raise ValueError(f"unsupported format: {fmt!r} (json|avro)")
 
-
-def lookup_registry_schema(schema_id: int) -> str:  # pragma: no cover
-    """Convenience: resolve via ``$SCHEMA_REGISTRY_ENDPOINT``. Library code
-    should construct :class:`SchemaRegistryClient` (injectable transport)
-    instead."""
-    import os
-
-    endpoint = os.environ.get("SCHEMA_REGISTRY_ENDPOINT")
-    if not endpoint:
-        raise NotImplementedError(
-            "set SCHEMA_REGISTRY_ENDPOINT or inject a resolver that maps "
-            "schema_id -> Avro schema JSON"
-        )
-    return SchemaRegistryClient(endpoint)(schema_id)

@@ -9,10 +9,10 @@ checkpoint and delete obsolete log JSON):
   collapses, then delete older commit JSONs. Time travel to expired
   versions becomes unavailable (exactly Delta/Iceberg semantics).
 - ``gc_orphans``: files on disk − files referenced by any readable version
-  − staged-but-uncommitted files younger than ``grace_s``. The membership
-  check runs as a Spark **left-anti join** between the disk listing and the
-  referenced-path set so it scales to 10^8 paths (both sides are
-  DataFrames; no driver-side set beyond the log itself).
+  − staged-but-uncommitted files younger than ``grace_s``. Both sides are
+  already driver-side (an ``os.walk`` listing and the log's referenced-path
+  set), so the difference and the unlinks run on the driver too: no Spark
+  job, and memory linear in the table's file count.
 """
 
 from __future__ import annotations
@@ -86,59 +86,38 @@ def gc_orphans(
     ``grace_s`` protects in-flight staged commits: files newer than the
     grace window are never collected (the reference's equivalent safety is
     that uncommitted parquet buffers live only in memory; ours live staged
-    on disk until the log commit)."""
+    on disk until the log commit). ``spark`` is unused: the call launches
+    no Spark job, and the parameter stays for existing callers."""
     t0 = time.time()
-    now = time.time()
+    cutoff = t0 - grace_s
     on_disk: list[tuple[str, float]] = []
     for dirpath, _dirs, files in os.walk(table.data_dir):
         for fn in files:
             p = os.path.join(dirpath, fn)
-            rel = os.path.relpath(p, table.root)
-            on_disk.append((rel, os.path.getmtime(p)))
+            on_disk.append((p, os.path.getmtime(p)))
+    # read the log AFTER listing the disk: a file committed in between is
+    # then referenced, never an orphan
     referenced = table.all_referenced_paths()
+    orphans = [
+        p for p, mtime in on_disk
+        if mtime < cutoff and os.path.relpath(p, table.root) not in referenced
+    ]
 
-    if not on_disk:
-        return {"deleted": 0, "kept": 0, "duration_s": time.time() - t0}
-
-    disk_df = spark.createDataFrame(on_disk, "path string, mtime double")
-    ref_df = spark.createDataFrame([(p,) for p in referenced] or [("",)], "path string")
-    orphans_df = (
-        disk_df.join(ref_df, "path", "left_anti")
-        .where(disk_df.mtime < now - grace_s)
-        .select("path")
-    )
-    n_orphans = orphans_df.count()
     deleted = 0
-    if not dry_run and n_orphans:
-        # deletes run ON THE EXECUTORS (mapPartitions + per-partition
-        # count): at 10^8 files a driver-side unlink loop is the
-        # bottleneck; against an object store each partition issues its
-        # own batched delete calls. Capture only the root string.
-        root = table.root
-
-        def _delete_partition(rows):
-            import os as _os
-
-            n = 0
-            for r in rows:
-                try:
-                    _os.unlink(_os.path.join(root, r["path"]))
-                    n += 1
-                except FileNotFoundError:
-                    pass  # raced by a concurrent GC — already gone
-            yield n
-
-        deleted = int(
-            orphans_df.rdd.mapPartitions(_delete_partition).sum()
-        )
-    # prune now-empty data dirs (cosmetic)
     if not dry_run:
+        for p in orphans:
+            try:
+                os.unlink(p)
+                deleted += 1
+            except FileNotFoundError:
+                pass  # raced by a concurrent GC — already gone
+        # prune now-empty data dirs (cosmetic)
         for dirpath, dirs, files in os.walk(table.data_dir, topdown=False):
             if not dirs and not files and dirpath != table.data_dir:
                 os.rmdir(dirpath)
     return {
         "deleted": deleted,
-        "candidates": n_orphans,
-        "kept": len(on_disk) - n_orphans,
+        "candidates": len(orphans),
+        "kept": len(on_disk) - len(orphans),
         "duration_s": time.time() - t0,
     }

@@ -77,13 +77,6 @@ def _elem_sql(col_name: str, i: int) -> str:
     return f"CAST(`{col_name}`[{i}] AS DOUBLE)"
 
 
-def _cos_const_sql(col_name: str, xs: list[float]) -> str:
-    """cosine_sim(CAST(col AS ARRAY<DOUBLE>), <literal vector>) as text —
-    the exact shape of the Column version below."""
-    v, a = _cast_vec_sql(col_name), _arr_sql(xs)
-    return f"({_dot_sql(v, a)} / ({_norm_sql(v)} * {_norm_sql(a)}))"
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),

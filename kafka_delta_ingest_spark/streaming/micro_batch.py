@@ -13,6 +13,16 @@ Two entry points:
   allowed_latency flush, src/lib.rs:1102-1145) with our table's commit
   protocol as the sink.
 
+One pass per batch, like the reference's parse-once-then-route loop
+(src/lib.rs:326-524): the ledger dedupe, the JSON coercion and the
+transforms are persisted once, and everything after reads that result —
+
+1. one ``groupBy(_partition)`` aggregate gives the txn offsets and the
+   dead-letter count (an empty result is a replay: nothing is written);
+2. the good rows are staged and committed with the offsets;
+3. only then are the dead letters staged and committed to the DLQ table;
+4. the persisted batch is released, also when a step fails.
+
 Input contract (the Kafka-message analogue): columns
   ``value: string`` (JSON payload), ``_partition int``, ``_offset long``,
   optional ``_topic string``, ``_ts long``.
@@ -24,7 +34,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka_delta_ingest_spark.ingest.buffers import (
     dedupe_against_ledger,
@@ -32,7 +41,7 @@ from kafka_delta_ingest_spark.ingest.buffers import (
 )
 from kafka_delta_ingest_spark.ingest.coercions import coerce_json
 from kafka_delta_ingest_spark.ingest.dead_letters import (
-    DEAD_LETTER_SCHEMA,
+    is_dead_letter,
     split_dead_letters,
 )
 from kafka_delta_ingest_spark.ingest.transforms import Transformer
@@ -72,11 +81,12 @@ class IngestPipeline:
         # gauges are skipped rather than fed absolute positions
         self.high_watermarks = high_watermarks
 
-    def stored_offsets(self) -> dict[int, int]:
+    def stored_offsets(self, snap=None) -> dict[int, int]:
         """Per-partition last committed offsets from the table's app txns
         (the seek_consumer analogue, src/lib.rs:1049-1084)."""
         prefix = f"{self.app_id}-"
-        snap = self.table.snapshot()
+        if snap is None:
+            snap = self.table.snapshot()
         return {
             int(k[len(prefix) :]): v
             for k, v in snap.app_txns.items()
@@ -91,13 +101,38 @@ class IngestPipeline:
             self.metrics.batch_started()
         snap = self.table.snapshot()
 
-        fresh, watermarks = dedupe_against_ledger(
-            spark, batch, self.stored_offsets()
-        )
+        fresh, _ = dedupe_against_ledger(spark, batch, self.stored_offsets(snap))
         meta_cols = [c for c in ("_partition", "_offset", "_topic", "_ts") if c in batch.columns]
         coerced = coerce_json(fresh, snap.schema, json_col="value", keep_cols=meta_cols)
-        transformed = self.transformer.apply(coerced)
-        good, dead = split_dead_letters(transformed)
+        # every action below reads this one materialization: the dedupe
+        # shuffle and the JSON parse run once per batch, not once per action
+        parsed = self.transformer.apply(coerced).persist()
+        try:
+            return self._write_parsed(spark, snap, parsed, meta_cols, t0)
+        finally:
+            parsed.unpersist()
+
+    def _write_parsed(self, spark, snap, parsed: DataFrame, meta_cols, t0) -> dict:
+        # one aggregate gives both the txn offsets and the dead-letter count.
+        # It reads two columns of the in-memory batch in one task: a single
+        # input partition satisfies the grouping, so no shuffle and no extra
+        # job (the persisted batch is still built in parallel, by its own job)
+        per_partition = (
+            parsed.coalesce(1)
+            .groupBy("_partition")
+            .agg(
+                F.max("_offset").alias("max_offset"),
+                F.count_if(is_dead_letter()).alias("n_dead"),
+            )
+            .collect()
+        )
+        app_txns = watermarks_to_app_txns(per_partition, self.app_id)
+        if not app_txns:
+            # never commit empty (ref: no empty version bumps, lib.rs:1102-1124)
+            return {"rows": 0, "dead": 0, "skipped_all": True, "duration_s": time.time() - t0}
+        n_dead = sum(r["n_dead"] for r in per_partition)
+
+        good, dead = split_dead_letters(parsed)
         if self.upsert_key:
             # latest-wins within the batch BEFORE meta columns drop: a CDC
             # feed carries several versions of a key per batch; Kafka order
@@ -117,11 +152,6 @@ class IngestPipeline:
             )
         good = good.drop(*meta_cols)
 
-        app_txns = watermarks_to_app_txns(watermarks, self.app_id)
-        if not app_txns:
-            return {"rows": 0, "dead": 0, "skipped_all": True, "duration_s": time.time() - t0}
-
-        # never commit empty (ref: no empty version bumps, lib.rs:1102-1124)
         if self.metrics:
             self.metrics.delta_write_started()
         t_write = time.time()
@@ -144,6 +174,8 @@ class IngestPipeline:
                 # measured 960 ~3 KB files for one sf0.1 batch, 30 after)
                 _, adds = stage_dataframe(
                     spark, self.table, good, snap.partition_cols, snap.schema,
+                    properties=snap.properties,
+                    column_mapping=snap.column_mapping,
                     layout="rebalance",
                 )
                 v = self.table.commit(
@@ -168,24 +200,17 @@ class IngestPipeline:
         # batch, whose main commit is then rejected — so at-most-once DLQ
         # loss is the worst case, matching the reference's stance that dead
         # letters are best-effort diagnostics, src/dead_letters.rs.)
-        n_dead = 0
-        if self.dlq_table is not None:
-            dead_rows = dead.count()
-            if dead_rows:
-                dsnap = self.dlq_table.snapshot()
-                _, dadds = stage_dataframe(
-                    spark, self.dlq_table, dead, dsnap.partition_cols, dsnap.schema
-                )
-                self.dlq_table.commit(
-                    Transaction(operation="dead-letters", adds=dadds)
-                )
-                n_dead = dead_rows
+        if self.dlq_table is not None and n_dead:
+            dsnap = self.dlq_table.snapshot()
+            _, dadds = stage_dataframe(
+                spark, self.dlq_table, dead, dsnap.partition_cols, dsnap.schema,
+                properties=dsnap.properties,
+                column_mapping=dsnap.column_mapping,
+            )
+            self.dlq_table.commit(Transaction(operation="dead-letters", adds=dadds))
         if self.metrics:
-            n_good = n_rows
-            if self.dlq_table is None:
-                n_dead = dead.count()
-            self.metrics.message_deserialized(n_good + n_dead)
-            self.metrics.message_transformed(n_good)
+            self.metrics.message_deserialized(n_rows + n_dead)
+            self.metrics.message_transformed(n_rows)
             if n_dead:
                 self.metrics.message_transform_failed(n_dead)
             self.metrics.message_deserialized_size(n_bytes)

@@ -21,7 +21,6 @@ same code runs over a 10^6-file commit on a real cluster.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 from typing import Any
@@ -346,7 +345,3 @@ def compute_add_entries_scan(
     # determinism for ledgers/tests
     entries.sort(key=lambda e: e.path)
     return entries
-
-
-def stats_as_json(entries: list[FileEntry]) -> str:
-    return json.dumps([e.to_json() for e in entries], indent=2)

@@ -112,10 +112,6 @@ def keys(spec: list[str]) -> list[str]:
     return [key(e) for e in spec]
 
 
-def has_transforms(spec: list[str]) -> bool:
-    return any(parse(e)[0] != "identity" for e in spec)
-
-
 def apply_expr(entry: str, col: Column, dt: T.DataType) -> Column:
     """The transform applied to an arbitrary column expression of the
     source column's type ``dt`` — pure Catalyst, stays in codegen."""

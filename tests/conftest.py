@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,3 +24,26 @@ def spark():
 @pytest.fixture()
 def tmp_table_root(tmp_path):
     return str(tmp_path / "table")
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` — after the block, ``jobs`` holds the
+    ids of the Spark jobs it launched (counted under a job group of its
+    own, once the listener bus has delivered every job event)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def track():
+        group = f"jobs-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return track

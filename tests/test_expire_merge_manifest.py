@@ -60,6 +60,40 @@ def test_expire_snapshots_and_gc_orphans(spark, tmp_table_root):
     assert gc_orphans(spark, t, grace_s=0.0)["candidates"] == 0
 
 
+def test_gc_runs_on_driver_and_skips_vanished_files(
+    spark, tmp_table_root, spark_jobs, monkeypatch
+):
+    t = make_small_file_table(spark, tmp_table_root, n_docs=300, n_files=6, max_tok=16)
+    fp = content_fingerprint(t.snapshot().scan(spark))
+    compact(spark, t, target_file_bytes=64 * 1024 * 1024, job_id="gc-d")
+    expire_snapshots(t, retain_last=1)
+    with spark_jobs() as jobs:
+        g0 = gc_orphans(spark, t, grace_s=0.0, dry_run=True)
+    assert jobs == [] and g0["candidates"] >= 2
+
+    # a concurrent GC takes one candidate between the listing and its unlink
+    real_unlink = os.unlink
+    vanished = []
+
+    def unlink(path, *a, **kw):
+        if not vanished and str(path).endswith(".parquet"):
+            vanished.append(path)
+            real_unlink(path, *a, **kw)
+            raise FileNotFoundError(path)
+        return real_unlink(path, *a, **kw)
+
+    monkeypatch.setattr(os, "unlink", unlink)
+    with spark_jobs() as jobs:
+        g = gc_orphans(spark, t, grace_s=0.0)
+    monkeypatch.undo()
+    assert jobs == []
+    assert vanished and not os.path.exists(vanished[0])
+    assert g["candidates"] == g0["candidates"]
+    assert g["deleted"] == g0["candidates"] - 1
+    assert gc_orphans(spark, t, grace_s=0.0)["candidates"] == 0
+    assert content_fingerprint(t.snapshot().scan(spark)) == fp
+
+
 def test_time_travel_by_timestamp_and_age_expiry(spark, tmp_table_root):
     t = make_small_file_table(spark, tmp_table_root, n_docs=200, n_files=4, max_tok=16)
     v1 = t.latest_version()

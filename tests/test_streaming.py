@@ -6,6 +6,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -14,7 +15,7 @@ from kafka_delta_ingest_spark.streaming.micro_batch import (
     IngestPipeline,
     start_stream_ingest,
 )
-from kafka_delta_ingest_spark.table.format import Table
+from kafka_delta_ingest_spark.table.format import Table, TableError
 
 SCHEMA = T.StructType(
     [
@@ -74,6 +75,67 @@ def test_ingest_dead_letters_to_dlq_table(spark, tmp_path):
     assert len(rows) == 3
     assert all("coercion failed" in r["error"] for r in rows)
     assert all(r["json_string"] and "garbage-ts" in r["json_string"] for r in rows)
+
+
+def _persisted(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_ingest_batch_job_budget(spark, tmp_path, spark_jobs):
+    """One pass per batch: the dedupe and the parse are persisted once and
+    the offsets, the dead-letter count and both writes read that result."""
+    table, pipe = _pipeline(str(tmp_path / "t"), str(tmp_path / "dlq"))
+    pipe.ingest_batch(spark, _msgs(spark, range(10)))  # offsets now stored
+    batch = _msgs(spark, range(10, 40), bad={12, 25, 31})
+    before = _persisted(spark)
+    with spark_jobs() as jobs:
+        m = pipe.ingest_batch(spark, batch)
+    assert m["rows"] == 27 and m["dead"] == 3
+    assert pipe.dlq_table.snapshot().scan(spark).count() == 3
+    assert len(jobs) <= 8, jobs
+    assert _persisted(spark) == before
+
+    v, dv = table.latest_version(), pipe.dlq_table.latest_version()
+    with spark_jobs() as jobs:
+        m = pipe.ingest_batch(spark, batch)
+    assert m.get("skipped_all")
+    assert (table.latest_version(), pipe.dlq_table.latest_version()) == (v, dv)
+    assert len(jobs) <= 3, jobs
+    assert _persisted(spark) == before
+
+
+def test_failed_main_commit_lands_no_dead_letters(spark, tmp_path, monkeypatch):
+    """The dead letters commit only after the main commit: when it fails,
+    neither lands and the persisted batch is released; re-sending the
+    batch then commits it, dead letters included, exactly once."""
+    table, pipe = _pipeline(str(tmp_path / "t"), str(tmp_path / "dlq"))
+    batch = _msgs(spark, range(12), bad={2, 9})
+    real_commit = Table.commit
+    failed = []
+
+    def commit_failing_once(self, *a, **kw):
+        if self.root == table.root and not failed:
+            failed.append(True)
+            raise TableError("injected commit failure")
+        return real_commit(self, *a, **kw)
+
+    monkeypatch.setattr(Table, "commit", commit_failing_once)
+    v, dv = table.latest_version(), pipe.dlq_table.latest_version()
+    before = _persisted(spark)
+    with pytest.raises(TableError, match="injected"):
+        pipe.ingest_batch(spark, batch)
+    assert (table.latest_version(), pipe.dlq_table.latest_version()) == (v, dv)
+    assert pipe.dlq_table.snapshot().scan(spark).count() == 0
+    assert _persisted(spark) == before
+
+    m = pipe.ingest_batch(spark, batch)
+    assert m["rows"] == 10 and m["dead"] == 2
+    assert pipe.ingest_batch(spark, batch).get("skipped_all")
+    assert table.snapshot().scan(spark).count() == 10
+    assert pipe.dlq_table.snapshot().scan(spark).count() == 2
+    assert table.latest_version() == v + 1
+    assert pipe.dlq_table.latest_version() == dv + 1
+    assert _persisted(spark) == before
 
 
 def test_stream_ingest_micro_batches(spark, tmp_path):
